@@ -101,11 +101,13 @@ object SparseCosineJoin {
     // exchange, and the norm aggregate joined back twice) — unchecked, the
     // whole explode→tf→df→join pipeline re-executes per consumer (measured
     // 3-4x at sf0.1: q117 0.85 -> 0.17 s warm). LAZY localCheckpoint: the
-    // first action materializes the postings once (MEMORY_AND_DISK, the
-    // same rows the pair join shuffles anyway) and every consumer reads
-    // the blocks; laziness keeps plan-building job-free, which the SQL TVF
-    // builder (analysis-time construction, EXPLAIN must not run jobs)
-    // requires. Same non-reliable-storage caveat as the salted
+    // postings are materialized once (MEMORY_AND_DISK, the same rows the
+    // pair join shuffles anyway) and every consumer reads the blocks.
+    // Lazy does NOT mean job-free: under AQE, localCheckpoint(false) still
+    // runs the upstream stages when it takes the plan's toRdd, i.e. while
+    // this frame is being BUILT — which is why the SQL TVF defers the
+    // whole construction behind a DeferredResult leaf (EXPLAIN must not
+    // run jobs). Same non-reliable-storage caveat as the salted
     // BandedSelfJoin branch: an executor loss fails the job rather than
     // recomputing lineage.
     val w = tf.join(df, "t")

@@ -72,15 +72,15 @@ object DeferredResult {
     * served to session B, the scoreCache lesson), the function name, and
     * the builder-supplied argsKey. Values are eagerly localCheckpoint'd
     * frames: the training iterations run exactly once; later actions
-    * scan the checkpoint. Bounded at [[MemoCap]] entries — overflow
-    * clears the whole memo (results are reproducible; a cold retrain is
-    * correct, just slower) so a long-lived SQL session cannot
-    * accumulate unbounded checkpoint blocks.
+    * scan the checkpoint. Bounded by [[graft.ArtifactCache]], the one
+    * bounded-memo policy: overflow unpersists and clears the whole memo
+    * (results are reproducible; a cold retrain is correct, just slower)
+    * so a long-lived SQL session cannot accumulate unbounded checkpoint
+    * blocks.
     */
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[
       (org.apache.spark.sql.SparkSession, String, String), DataFrame]()
-  private val MemoCap = 64
 
   /** Test/ops hook: drop every memoized TVF result (e.g. after
     * overwriting the files behind a registered view in place). */
@@ -94,12 +94,10 @@ object DeferredResult {
     */
   def memoized(fnName: String, declared: StructType, argsKey: String,
       build: () => DataFrame): DeferredResult =
-    apply(fnName, declared, () => {
-      if (memo.size > MemoCap) memo.clear()
-      memo.computeIfAbsent(
-        (org.apache.spark.sql.SparkSession.active, fnName, argsKey),
-        _ => build().localCheckpoint(eager = true))
-    })
+    apply(fnName, declared, () =>
+      graft.ArtifactCache.get(memo,
+        (org.apache.spark.sql.SparkSession.active, fnName, argsKey))(
+        build().localCheckpoint(eager = true)))
 }
 
 case class DeferredResultExec(

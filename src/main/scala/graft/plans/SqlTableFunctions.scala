@@ -198,6 +198,8 @@ object SqlTableFunctions {
       fail(s"$fn argument 5 (max df fraction) must be in (0, 1], got $maxDfFrac")
     if (!docs.columns.contains(idCol))
       fail(s"$fn argument 2 (id column): no column '$idCol' in the documents table")
+    if (!docs.columns.contains(textCol))
+      fail(s"$fn argument 3 (text column): no column '$textCol' in the documents table")
     // Deferred since r18: the operator materializes its weighted postings
     // once (localCheckpoint — four consumers), and under AQE even a lazy
     // checkpoint's toRdd executes the upstream stages, so an eagerly-built

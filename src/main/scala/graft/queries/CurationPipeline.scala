@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{ArtifactCache, Tables}
 
 /** q154 — the round-10 curation END GAME (the q129 pattern: compose the
   * round's trained/derived signals into the decision a pretraining run

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{ArtifactCache, Tables}
 import graft.operators.{Ann, MinHashLSH, SimHash, Vec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{ArtifactCache, Tables}
 import graft.operators.Bpe
 
 /** Declared queries for the in-engine BPE tokenizer trainer

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{ArtifactCache, Tables}
 import graft.operators.{Bpe, UnigramLm}
 
 /** q147/q148: unigram-LM (SentencePiece-style) tokenizer training and

@@ -1,10 +1,6 @@
 package graft.sources.tiff
 
-import java.awt.Rectangle
-import java.io.File
 import java.util
-
-import javax.imageio.ImageIO
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -56,9 +52,11 @@ import graft.functions.GeoMath
   * Paths/colNames must not contain ',' (flat string options).
   *
   * Scale posture: planning reads only TIFF headers (one tiny IFD read per
-  * raster); each task decodes exactly its window via an ImageIO region
-  * read, so executor memory is bounded by maxBlockSize² regardless of
-  * raster size, and tasks scale with raster area / block².
+  * raster); each task decodes exactly the chunks its window overlaps
+  * through the one chunk reader ([[ChunkGrid]] over [[StripDecode]]), for
+  * classic TIFF and BigTIFF alike, so executor memory is bounded by
+  * maxBlockSize² plus one chunk regardless of raster size, and tasks
+  * scale with raster area / block².
   */
 class GeoTiffSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "geotiff"
@@ -136,6 +134,32 @@ object GeoTiffTable {
   def coordNames(meta: TiffTags.RasterMeta): (String, String) =
     if (meta.nonGeographic) ("x", "y") else ("lon", "lat")
 
+  /** Fractional (col, row) in secondary raster `sec` of mask pixel
+    * (c, r)'s centroid, through the cross-CRS transform `t` when one
+    * applies. THE single copy of that composition at planning time: the
+    * coverage check, the mask-window sizing and the per-window read
+    * planning all call it, so they cannot drift. The per-pixel samplers
+    * in [[GeoTiffPartitionReader]] inline the same steps on the hot path.
+    */
+  def secondaryFrac(mask: TiffTags.RasterMeta, sec: TiffTags.RasterMeta,
+      t: Option[(Double, Double) => (Double, Double)])(c: Double, r: Double): (Double, Double) = {
+    var gx = mask.lonOf(c, r)
+    var gy = mask.latOf(c, r)
+    t.foreach { f => val (tx, ty) = f(gx, gy); gx = tx; gy = ty }
+    (sec.fracColOf(gx, gy), sec.fracRowOf(gx, gy))
+  }
+
+  /** The CRS pairs resample=nearest can transform between, named in every
+    * CRS-mismatch error raised under that option.
+    */
+  val SupportedResampleTransforms: String =
+    "; supported resample transforms are same-datum pairs of " +
+      "EPSG:4326/UTM 326xx/327xx/polar 3413,3976,3031/UPS/3857/polar LAEA " +
+      "3573-3576 (WGS84), EPSG:4269/UTM 269xx/Albers 5070,6350,3310/LCC " +
+      "26941-26946 (NAD83), and EPSG:4258/LAEA 3035 (ETRS89); cross-datum " +
+      "pairs additionally need option datumBridge=epsg1188 (NAD83<->WGS84) " +
+      "or epsg1149 (ETRS89<->WGS84), ~1-2 m accuracy"
+
   /** Smallest Spark type that holds the raster's sample type (Spark has no
     * unsigned ints, so unsigned widens: u8->short, u16->int, u32->long).
     */
@@ -179,8 +203,9 @@ class GeoTiffTable(
       // pairings in land-cover work. Cross-datum pairs keep their typed
       // rejection unless datumBridge=epsg1188 opted in (round 16); every
       // other mismatched pair keeps its typed rejection below.
-      val crossCrs = resampleNearest &&
-        CrsTransform.zipTransform(first, m, datumBridge).isDefined
+      val t =
+        if (resampleNearest) CrsTransform.zipTransform(first, m, datumBridge) else None
+      val crossCrs = t.isDefined
       // identical grids required UNLESS resample=nearest was requested:
       // then the mask (first) grid defines the output and each secondary
       // is sampled at the mask centroids — but it must COVER the mask
@@ -194,13 +219,7 @@ class GeoTiffTable(
           s"raster CRS mismatch: ${first.path} (model type ${first.crsModelType}) vs " +
             s"${m.path} (model type ${m.crsModelType}) — geographic and projected " +
             "rasters cannot share a point grid" +
-            (if (resampleNearest) "; supported resample transforms are same-datum " +
-              "pairs of EPSG:4326/UTM 326xx/327xx/polar 3413,3976,3031/UPS/" +
-              "3857/polar LAEA 3573-3576 (WGS84), EPSG:4269/UTM 269xx/" +
-              "Albers 5070,6350,3310/LCC 26941-26946 (NAD83), or EPSG:4258/" +
-              "LAEA 3035 (ETRS89); cross-datum pairs additionally need option " +
-              "datumBridge=epsg1188 (NAD83<->WGS84) or epsg1149 " +
-              "(ETRS89<->WGS84), ~1-2 m accuracy" else ""))
+            (if (resampleNearest) GeoTiffTable.SupportedResampleTransforms else ""))
         // same kind is not enough: two DIFFERENT projected CRSs (UTM zones
         // routinely share identical numeric grids — false easting 500000,
         // same scale) or two geographic datums would zip pixels from
@@ -214,13 +233,7 @@ class GeoTiffTable(
           require(a == b,
             s"raster CRS mismatch: ${first.path} (EPSG:$a) vs ${m.path} (EPSG:$b) — " +
               "identical numeric grids in different CRSs are different places" +
-              (if (resampleNearest) "; supported resample transforms cover " +
-                "same-datum pairs of EPSG:4326/UTM 326xx/327xx/polar " +
-                "3413,3976,3031/UPS/3857/polar LAEA 3573-3576 (WGS84), " +
-                "EPSG:4269/UTM 269xx/Albers 5070,6350,3310/LCC 26941-26946 " +
-                "(NAD83), and EPSG:4258/LAEA 3035 (ETRS89); cross-datum " +
-                "pairs additionally need option datumBridge=epsg1188 " +
-                "(NAD83<->WGS84) or epsg1149 (ETRS89<->WGS84), ~1-2 m accuracy" else ""))
+              (if (resampleNearest) GeoTiffTable.SupportedResampleTransforms else ""))
       }
       if (resampleNearest && (crossCrs || !first.sameGrid(m))) {
         // Every mask centroid must land inside the secondary — clamping at
@@ -232,13 +245,7 @@ class GeoTiffTable(
         // the interior — sampled at 64 points per edge (inter-sample
         // curvature within a zone is meters at most, and the reader pads
         // its windows by 2 cells).
-        val t = CrsTransform.zipTransform(first, m, datumBridge)
-        def frac(cc: Double, rr: Double): (Double, Double) = {
-          var gx = first.lonOf(cc, rr)
-          var gy = first.latOf(cc, rr)
-          t.foreach { f => val (tx, ty) = f(gx, gy); gx = tx; gy = ty }
-          (m.fracColOf(gx, gy), m.fracRowOf(gx, gy))
-        }
+        val frac = GeoTiffTable.secondaryFrac(first, m, t) _
         if (t.isEmpty) {
           // affine pair: the extrema are EXACTLY at the four corners, so a
           // plain in-bounds check is complete — no inter-sample gap exists
@@ -441,18 +448,12 @@ class GeoTiffScan(
     val effBlock: Int =
       if (!resampleNearest) maxBlockSize
       else metas.tail
-        .filter(mi => !mi.sameGrid(m) || CrsTransform.zipTransform(m, mi, datumBridge).isDefined)
-        .foldLeft(maxBlockSize) { (acc, mi) =>
-        val t = CrsTransform.zipTransform(m, mi, datumBridge)
-        // secondary fractional index of mask pixel (c, r)'s centroid,
-        // through the cross-CRS transform when one applies — the same
-        // composition the per-pixel sampler uses, so planning and read
-        // time cannot drift
-        def secFrac(c: Double, r: Double): (Double, Double) = {
-          var gx = m.lonOf(c, r); var gy = m.latOf(c, r)
-          t.foreach { f => val (tx, ty) = f(gx, gy); gx = tx; gy = ty }
-          (mi.fracColOf(gx, gy), mi.fracRowOf(gx, gy))
-        }
+        .map(mi => (mi, CrsTransform.zipTransform(m, mi, datumBridge)))
+        .filter { case (mi, t) => !mi.sameGrid(m) || t.isDefined }
+        .foldLeft(maxBlockSize) { case (acc, (mi, t)) =>
+        // secondary fractional index of mask pixel (c, r)'s centroid —
+        // the composition the read planning and coverage check share
+        val secFrac = GeoTiffTable.secondaryFrac(m, mi, t) _
         def spanAt(c: Double, r: Double, dc: Double, dr: Double): (Double, Double) = {
           val (p0, q0) = secFrac(c, r)
           val (p1, q1) = secFrac(c + dc, r + dr)
@@ -541,34 +542,18 @@ class GeoTiffReaderFactory(
       datumBridge)
 }
 
-/** Uniform window-of-pixels accessor: (x, y) are WINDOW-relative. Two
-  * implementations — the ImageIO region read for classic TIFF, and the raw
-  * strip reader for BigTIFF (which ImageIO cannot decode). Both hold only
-  * O(window) memory.
+/** One band of one window of pixels, decoded by the chunk reader — the
+  * only pixel decoder, for classic TIFF and BigTIFF alike; (x, y) are
+  * WINDOW-relative. Uncompressed strips are seek-read row by row (a task
+  * reads O(window) bytes of a raster of any size: sample (row, col) lives
+  * at stripOffsets(row / rowsPerStrip) + ((row % rowsPerStrip) * width +
+  * col) * bytesPerSample); compressed strips are decompressed once per
+  * overlapping strip and the window's columns extracted ([[StripDecode]],
+  * O(strip + window) memory); TILED layouts (COG) decode each overlapping
+  * tile once (O(tile + window)).
   */
-private[tiff] trait PixelGrid {
-  def getSample(x: Int, y: Int): Int
-  def getSampleFloat(x: Int, y: Int): Float
-  def getSampleDouble(x: Int, y: Int): Double
-}
-
-private[tiff] final class AwtPixelGrid(r: java.awt.image.Raster, band: Int = 0) extends PixelGrid {
-  def getSample(x: Int, y: Int): Int = r.getSample(x, y, band)
-  def getSampleFloat(x: Int, y: Int): Float = r.getSampleFloat(x, y, band)
-  def getSampleDouble(x: Int, y: Int): Double = r.getSampleDouble(x, y, band)
-}
-
-/** Raw chunk window reader for BigTIFF. Uncompressed strips are seek-read
-  * row by row (a task reads O(window) bytes of a raster of any size:
-  * sample (row, col) lives at stripOffsets(row / rowsPerStrip) +
-  * ((row % rowsPerStrip) * width + col) * bytesPerSample); DEFLATE/LZW
-  * strips are decompressed once per overlapping strip and the window's
-  * columns extracted ([[StripDecode]], O(strip + window) memory); TILED
-  * layouts (COG) decode each overlapping tile once (O(tile + window)).
-  */
-private[tiff] final class RawStripGrid(meta: TiffTags.RasterMeta, window: TiffWindow,
-    band: Int = 0)
-  extends PixelGrid {
+private[tiff] final class ChunkGrid(meta: TiffTags.RasterMeta, window: TiffWindow,
+    band: Int = 0) {
 
   require(band >= 0 && band < meta.samplesPerPixel,
     s"${meta.path}: band ${band + 1} of ${meta.samplesPerPixel} requested")
@@ -599,9 +584,9 @@ private[tiff] final class RawStripGrid(meta: TiffTags.RasterMeta, window: TiffWi
 
   private def idx(x: Int, y: Int): Int = y * rowBytes + x * pixBytes + bandOff
 
-  /** Integer sample with the same conventions as AWT's getSample: unsigned
-    * widths zero-extend, signed widths sign-extend, 32-bit returns raw bits
-    * (the caller widens u32 with & 0xffffffffL exactly as for AWT).
+  /** Integer sample: unsigned widths zero-extend, signed widths
+    * sign-extend, 32-bit returns raw bits (the caller widens u32 with
+    * & 0xffffffffL).
     */
   def getSample(x: Int, y: Int): Int = {
     val i = idx(x, y)
@@ -612,7 +597,7 @@ private[tiff] final class RawStripGrid(meta: TiffTags.RasterMeta, window: TiffWi
       case (16, _) => buf.getShort(i) & 0xffff
       case (32, _) => buf.getInt(i)
       case (b, f) => throw new IllegalStateException(
-        s"${meta.path}: unsupported BigTIFF integer layout bits=$b format=$f")
+        s"${meta.path}: unsupported integer layout bits=$b format=$f")
     }
   }
 
@@ -627,8 +612,8 @@ private[tiff] final class RawStripGrid(meta: TiffTags.RasterMeta, window: TiffWi
 }
 
 /** Reads one window of every (non-pruned) raster and streams the valid
-  * pixels of raster 1 as rows. Region reads keep memory at O(window), and
-  * each raster is decoded at most once per task.
+  * pixels of raster 1 as rows. Window reads keep memory at O(window +
+  * chunk), and each raster is decoded at most once per task.
   */
 class GeoTiffPartitionReader(
     metas: Array[TiffTags.RasterMeta],
@@ -687,11 +672,7 @@ class GeoTiffPartitionReader(
           cs.map(c => (c, r0f)) ++ cs.map(c => (c, r1f)) ++
             rs.map(r => (c0f, r)) ++ rs.map(r => (c1f, r))
         }
-      val fracs = pts.map { case (cc, rr) =>
-        var gx = m0.lonOf(cc, rr); var gy = m0.latOf(cc, rr)
-        t.foreach { f => val (tx, ty) = f(gx, gy); gx = tx; gy = ty }
-        (mi.fracColOf(gx, gy), mi.fracRowOf(gx, gy))
-      }
+      val fracs = pts.map { case (cc, rr) => GeoTiffTable.secondaryFrac(m0, mi, t)(cc, rr) }
       val pad = if (t.isEmpty) 0 else 2
       val c0 = math.min(math.max(math.floor(fracs.map(_._1).min).toInt - pad, 0), mi.width - 1)
       val c1 = math.min(math.max(math.floor(fracs.map(_._1).max).toInt + pad, 0), mi.width - 1)
@@ -701,30 +682,9 @@ class GeoTiffPartitionReader(
     }
   }
 
-  private lazy val rasters: Array[PixelGrid] = {
-    val arr = new Array[PixelGrid](metas.length)
-    valueIdx.foreach { i =>
-      val rw = readWindows(i)
-      if (metas(i).bigTiff) {
-        require(bands(i) >= 1 && bands(i) <= metas(i).samplesPerPixel,
-          s"${metas(i).path}: band ${bands(i)} out of range " +
-            s"(raster has ${metas(i).samplesPerPixel} bands)")
-        arr(i) = new RawStripGrid(metas(i), rw, bands(i) - 1)
-      } else {
-        val reader = ImageIO.getImageReadersByFormatName("tiff").next()
-        val iis = ImageIO.createImageInputStream(new File(metas(i).path))
-        try {
-          reader.setInput(iis)
-          val p = reader.getDefaultReadParam
-          p.setSourceRegion(new Rectangle(rw.colOff, rw.rowOff, rw.width, rw.height))
-          arr(i) = new AwtPixelGrid(
-            reader.read(metas(i).imageIndex, p).getRaster, bands(i) - 1)
-        } finally {
-          reader.dispose()
-          iis.close()
-        }
-      }
-    }
+  private lazy val rasters: Array[ChunkGrid] = {
+    val arr = new Array[ChunkGrid](metas.length)
+    valueIdx.foreach(i => arr(i) = new ChunkGrid(metas(i), readWindows(i), bands(i) - 1))
     arr
   }
 

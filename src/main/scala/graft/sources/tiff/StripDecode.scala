@@ -4,7 +4,8 @@ import java.io.RandomAccessFile
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.Inflater
 
-/** Chunk decode for the BigTIFF raw reader: window extraction over
+/** Chunk decode — the one pixel decoder, for classic TIFF and BigTIFF
+  * alike (offsets are Long either way): window extraction over
   * uncompressed strips (seek-only, O(window) I/O), over DEFLATE/LZW
   * compressed strips (each overlapping strip is decompressed once, the
   * predictor is undone, and only the window's columns are kept), and over

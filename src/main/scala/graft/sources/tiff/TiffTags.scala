@@ -3,30 +3,32 @@ package graft.sources.tiff
 import java.io.RandomAccessFile
 import java.nio.{ByteBuffer, ByteOrder}
 
-/** Minimal TIFF IFD tag scanner for the GeoTIFF metadata the raster source
-  * needs. Pixel decode is delegated to the JDK ImageIO TIFF plugin for
-  * classic TIFF; this parser only pulls the geometry/nodata tags, which the
-  * ImageIO metadata tree does not reliably surface for private tags.
+/** Minimal TIFF IFD tag scanner: the GeoTIFF metadata the raster source
+  * needs plus the chunk layout its one pixel decoder reads.
   *
   * Covers classic TIFF (magic 42, 4-byte offsets) AND BigTIFF (magic 43,
-  * 8-byte offsets) in both byte orders, IFD0 only. BigTIFF matters at the
-  * posture this engine claims: real-world global rasters exceed the 4 GiB
-  * classic-TIFF limit routinely. ImageIO cannot decode BigTIFF, so for
-  * BigTIFF we also read the chunk layout tags — strips (273/278/279) OR
-  * tiles (322/323/324/325, the cloud-optimized-GeoTIFF shape) — and the
-  * source decodes chunks itself ([[GeoTiffPartitionReader]] via
-  * [[StripDecode]]): uncompressed, DEFLATE, and LZW, with the horizontal-
-  * differencing predictor — the layouts GDAL writes for real large rasters.
-  * Multi-band BigTIFF decodes pixel-interleaved
-  * (chunky) or band-separate planes (planar); unsupported layouts (other
-  * codecs, mixed-depth bands) are rejected with a typed error rather than
-  * garbage.
+  * 8-byte offsets) in both byte orders, along the IFD chain (overviews).
+  * BigTIFF matters at the posture this engine claims: real-world global
+  * rasters exceed the 4 GiB classic-TIFF limit routinely. The two flavours
+  * differ only in header, entry and offset widths; both go through the
+  * same layout parse and typed gates below. The chunk layout is strips
+  * (273/278/279) OR tiles (322/323/324/325, the cloud-optimized-GeoTIFF
+  * shape), and the source decodes chunks itself ([[GeoTiffPartitionReader]]
+  * via [[StripDecode]]): uncompressed, DEFLATE, LZW, PackBits, ZSTD, LZMA
+  * and new-style JPEG, with the horizontal-differencing and floating-point
+  * predictors — the layouts GDAL writes. Multi-band files decode
+  * pixel-interleaved (chunky) or band-separate planes (planar); unsupported
+  * layouts (other codecs, mixed-depth bands) are rejected with a typed
+  * error rather than garbage.
   *
   * Tags read:
   *   - 256/257 ImageWidth/ImageLength
   *   - 258 BitsPerSample, 339 SampleFormat (1=uint, 2=int, 3=float)
-  *   - 259 Compression, 277 SamplesPerPixel, 278 RowsPerStrip,
-  *     273 StripOffsets, 279 StripByteCounts (BigTIFF only)
+  *   - 259 Compression, 277 SamplesPerPixel, 284 PlanarConfiguration,
+  *     317 Predictor, 262 PhotometricInterpretation and 347 JPEGTables
+  *     (JPEG only)
+  *   - 273 StripOffsets, 278 RowsPerStrip, 279 StripByteCounts, or
+  *     322/323 TileWidth/TileLength, 324 TileOffsets, 325 TileByteCounts
   *   - 33550 ModelPixelScale (GeoTIFF: sx, sy, sz)
   *   - 33922 ModelTiepoint  (GeoTIFF: i, j, k, x, y, z)
   *   - 34264 ModelTransformation (GeoTIFF: row-major 4×4 affine — the FULL
@@ -57,8 +59,8 @@ object TiffTags {
       originY: Double,
       noData: Option[Double],
       samplesPerPixel: Int = 1,
-      // BigTIFF raw-strip decode layout (empty for classic TIFF, where
-      // ImageIO handles pixels); littleEndian rides along so executors can
+      // chunk decode layout (both flavours; bigTiff only records which
+      // header the file carried); littleEndian rides along so executors can
       // decode without re-reading the header.
       bigTiff: Boolean = false,
       littleEndian: Boolean = true,
@@ -66,9 +68,10 @@ object TiffTags {
       // IndexedSeq, not Array: an Array field would silently break the
       // case class's generated equals/hashCode (reference equality)
       stripOffsets: IndexedSeq[Long] = Vector.empty,
-      // 1=none, 5=LZW, 8/32946=DEFLATE; predictor 1=none, 2=horizontal
-      // differencing. stripByteCounts is populated only when compressed
-      // (uncompressed strip lengths are computable from the grid).
+      // compression codes as gated in readOverview; predictor 1=none,
+      // 2=horizontal differencing, 3=floating-point. stripByteCounts is
+      // populated only when compressed (uncompressed strip lengths are
+      // computable from the grid).
       compression: Int = 1,
       predictor: Int = 1,
       stripByteCounts: IndexedSeq[Long] = Vector.empty,
@@ -83,10 +86,6 @@ object TiffTags {
       // the GDAL INTERLEAVE=BAND layout): in planar files each band's
       // chunks are stored plane-major (all of band 1's, then band 2's...)
       planarConfig: Int = 1,
-      // which image of the file's IFD chain this meta describes (0 = full
-      // resolution) — the ImageIO image index for the classic-TIFF decode
-      // path; the BigTIFF chunk reader carries the chunk offsets directly
-      imageIndex: Int = 0,
       // GeoKeyDirectory (34735) CRS facts. crsModelType = GTModelTypeGeoKey
       // 1024 (1=projected, 2=geographic, 3=geocentric; 32767=user-defined);
       // None when the file carries no GeoKeyDirectory at all. epsg = the
@@ -184,9 +183,8 @@ object TiffTags {
     * geographic extent of the raster identical at every level even when the
     * reduced dimensions are rounded). An overview that does carry its own
     * ModelPixelScale/ModelTiepoint keeps them. NoData likewise inherits
-    * from IFD0 unless overridden. Works for BigTIFF (the chunk reader uses
-    * the selected IFD's offsets directly) AND classic TIFF (the ImageIO
-    * decode uses the selected image index).
+    * from IFD0 unless overridden. The chunk reader uses the selected IFD's
+    * own chunk offsets, so no image index is carried.
     */
   def readOverview(path: String, overview: Int): RasterMeta = {
     require(overview >= 0, s"$path: overview must be >= 0, got $overview")
@@ -441,147 +439,133 @@ object TiffTags {
         .orElse(if (overview > 0) asciiIn(entries0, 42113) else None)
         .flatMap(parseNd)
 
-      if (!bigTiff) {
-        // ImageIO decodes classic-TIFF pixels, so nothing is gated here; the
-        // strip layout is still recorded (informational, and it lets tests
-        // cross-check our strip decoder against independently-written files).
-        RasterMeta(path, width, height, bps, sampleFormat,
-          scaleX, scaleY, originX, originY, noData,
-          rotX = rotX, rotY = rotY,
-          samplesPerPixel = shortOrLong(277, 1),
-          littleEndian = order == ByteOrder.LITTLE_ENDIAN,
-          rowsPerStrip = entries.get(278).map(e => intAt(e, payload(e), 0)).getOrElse(height.toLong),
-          stripOffsets = longs(273).map(_.toIndexedSeq).getOrElse(Vector.empty),
-          compression = shortOrLong(259, 1),
-          predictor = shortOrLong(317, 1),
-          stripByteCounts = longs(279).map(_.toIndexedSeq).getOrElse(Vector.empty),
-          imageIndex = overview,
-          crsModelType = crsModelType, epsg = epsg)
-      } else {
-        // BigTIFF pixels are decoded by our own chunk reader (ImageIO has no
-        // BigTIFF support): uncompressed, DEFLATE (8 and the legacy 32946),
-        // and LZW (5) layouts — stripped OR tiled (COG) — predictor none,
-        // horizontal-differencing (2, integer samples) or floating-point
-        // (3, float samples), i.e. what GDAL actually writes for large
-        // rasters. Everything else gets a typed error, never garbage.
-        val compression = shortOrLong(259, 1)
-        require(compression == 1 || compression == 5 || compression == 7 ||
-            compression == 8 || compression == 32946 || compression == 32773 ||
-            compression == 50000 || compression == 34925,
-          s"$path: BigTIFF compression $compression unsupported " +
-            "(1=none, 5=LZW, 7=JPEG, 8/32946=DEFLATE, 32773=PackBits, " +
-            "34925=LZMA, 50000=ZSTD)")
-        // new-style JPEG (7, TIFF TechNote 2): 8-bit unsigned samples only
-        // (the JDK JPEG decoder's domain), no predictor (meaningless over a
-        // transform codec), chunky layout (GDAL writes JPEG chunky)
-        require(compression != 7 || (bps == 8 && sampleFormat == 1),
-          s"$path: JPEG-in-TIFF requires 8-bit unsigned samples, got $bps-bit format $sampleFormat")
-        // PhotometricInterpretation (262) gates which color models the JDK
-        // decode's output actually matches the file's declared samples:
-        // 1 = grayscale, 6 = YCbCr (the GDAL JPEG default — the reader
-        // converts to RGB, which IS the intended sample meaning).
-        // RGB-stored (2) is rejected too: a 3-component JPEG stream with
-        // no Adobe/component-ID hints is ASSUMED YCbCr by the JDK decoder,
-        // which would apply a spurious inverse color transform to the
-        // stored RGB — silently wrong samples, exactly what this gate
-        // exists to block (GDAL's own JPEG-in-TIFF output is 1 or 6).
-        // Separated/CMYK (5), palette (3), CIELab (8)… would decode to
-        // values whose meaning silently differs — typed error, not garbage.
-        if (compression == 7) {
-          val photo = shortOrLong(262, if (shortOrLong(277, 1) == 1) 1 else 6)
-          require(photo == 1 || photo == 6,
-            s"$path: JPEG-in-TIFF PhotometricInterpretation $photo unsupported " +
-              "(1=grayscale and 6=YCbCr only: the JDK decoder infers the " +
-              "colorspace from the stream, so RGB-stored (2) risks a spurious " +
-              "YCbCr transform)")
+      // Pixels of both flavours are decoded by the chunk reader
+      // ([[StripDecode]]), so every layout is gated HERE, at planning:
+      // uncompressed, LZW (5), new-style JPEG (7), DEFLATE (8 and the legacy
+      // 32946), PackBits (32773), LZMA (34925) and ZSTD (50000) chunks —
+      // stripped OR tiled (COG) — with predictor none, horizontal
+      // differencing (2, integer samples) or floating-point (3, float
+      // samples). Everything else (old-style JPEG 6, CCITT, ...) gets a
+      // typed error, never garbage or a decode failure inside a task.
+      val compression = shortOrLong(259, 1)
+      require(compression == 1 || compression == 5 || compression == 7 ||
+          compression == 8 || compression == 32946 || compression == 32773 ||
+          compression == 50000 || compression == 34925,
+        s"$path: TIFF compression $compression unsupported " +
+          "(1=none, 5=LZW, 7=JPEG, 8/32946=DEFLATE, 32773=PackBits, " +
+          "34925=LZMA, 50000=ZSTD; old-style JPEG 6 is deprecated by TIFF TechNote 2)")
+      // new-style JPEG (7, TIFF TechNote 2): 8-bit unsigned samples only
+      // (the JDK JPEG decoder's domain), no predictor (meaningless over a
+      // transform codec), chunky layout (GDAL writes JPEG chunky)
+      require(compression != 7 || (bps == 8 && sampleFormat == 1),
+        s"$path: JPEG-in-TIFF requires 8-bit unsigned samples, got $bps-bit format $sampleFormat")
+      // PhotometricInterpretation (262) gates which color models the JDK
+      // decode's output actually matches the file's declared samples:
+      // 1 = grayscale, 6 = YCbCr (the GDAL JPEG default — the reader
+      // converts to RGB, which IS the intended sample meaning).
+      // RGB-stored (2) is rejected too: a 3-component JPEG stream with
+      // no Adobe/component-ID hints is ASSUMED YCbCr by the JDK decoder,
+      // which would apply a spurious inverse color transform to the
+      // stored RGB — silently wrong samples, exactly what this gate
+      // exists to block (GDAL's own JPEG-in-TIFF output is 1 or 6).
+      // Separated/CMYK (5), palette (3), CIELab (8)… would decode to
+      // values whose meaning silently differs — typed error, not garbage.
+      if (compression == 7) {
+        val photo = shortOrLong(262, if (shortOrLong(277, 1) == 1) 1 else 6)
+        require(photo == 1 || photo == 6,
+          s"$path: JPEG-in-TIFF PhotometricInterpretation $photo unsupported " +
+            "(1=grayscale and 6=YCbCr only: the JDK decoder infers the " +
+            "colorspace from the stream, so RGB-stored (2) risks a spurious " +
+            "YCbCr transform)")
+      }
+      val jpegTables: IndexedSeq[Byte] =
+        if (compression != 7) Vector.empty
+        else entries.get(347).map { e =>
+          val b = payload(e)
+          val arr = new Array[Byte](e.count.toInt)
+          b.get(arr)
+          require(arr.length >= 4 &&
+              (arr(0) & 0xff) == 0xff && (arr(1) & 0xff) == 0xd8 &&
+              (arr(arr.length - 2) & 0xff) == 0xff && (arr(arr.length - 1) & 0xff) == 0xd9,
+            s"$path: JPEGTables (347) is not an SOI…EOI stream")
+          arr.toIndexedSeq
+        }.getOrElse(Vector.empty)
+      val predictor = shortOrLong(317, 1)
+      require(compression != 7 || predictor == 1,
+        s"$path: predictor $predictor over JPEG chunks is malformed")
+      require(predictor == 1 || predictor == 2 || predictor == 3,
+        s"$path: TIFF predictor $predictor unsupported " +
+          "(1=none, 2=horizontal differencing, 3=floating-point)")
+      require(predictor != 2 || sampleFormat != 3,
+        s"$path: predictor 2 over float samples is malformed (floats use predictor 3)")
+      require(predictor != 3 || sampleFormat == 3,
+        s"$path: predictor 3 (floating-point differencing) over integer samples is malformed")
+      // multi-band: chunky (pixel-interleaved, PlanarConfiguration 1 —
+      // the GDAL INTERLEAVE=PIXEL default) and planar (band-separate
+      // chunks, INTERLEAVE=BAND; chunks stored plane-major) both decode
+      // natively. BitsPerSample / SampleFormat carry one entry per band —
+      // mixed-depth bands are rejected, uniform ones collapse to the
+      // single value the decode math uses.
+      val spp = shortOrLong(277, 1)
+      require(spp >= 1 && spp <= 16,
+        s"$path: implausible TIFF SamplesPerPixel $spp")
+      val planarCfg = if (spp > 1) shortOrLong(284, 1) else 1
+      require(planarCfg == 1 || planarCfg == 2,
+        s"$path: TIFF PlanarConfiguration $planarCfg unsupported " +
+          "(1 = chunky/pixel-interleaved, 2 = planar/band-separate)")
+      require(compression != 7 || planarCfg == 1,
+        s"$path: JPEG-in-TIFF planar layout unsupported (GDAL writes JPEG chunky)")
+      val planesPerChunk = if (planarCfg == 2) spp.toLong else 1L
+      def uniform(tag: Int, name: String, got: Int): Unit =
+        entries.get(tag).foreach { e =>
+          val b = payload(e)
+          val vals = (0 until e.count.toInt).map(i => intAt(e, b, i)).distinct
+          require(vals.size == 1 && vals.head == got.toLong,
+            s"$path: per-band $name values ${vals.mkString(",")} unsupported " +
+              "(bands must share one sample layout)")
         }
-        val jpegTables: IndexedSeq[Byte] =
-          if (compression != 7) Vector.empty
-          else entries.get(347).map { e =>
-            val b = payload(e)
-            val arr = new Array[Byte](e.count.toInt)
-            b.get(arr)
-            require(arr.length >= 4 &&
-                (arr(0) & 0xff) == 0xff && (arr(1) & 0xff) == 0xd8 &&
-                (arr(arr.length - 2) & 0xff) == 0xff && (arr(arr.length - 1) & 0xff) == 0xd9,
-              s"$path: JPEGTables (347) is not an SOI…EOI stream")
-            arr.toIndexedSeq
-          }.getOrElse(Vector.empty)
-        val predictor = shortOrLong(317, 1)
-        require(compression != 7 || predictor == 1,
-          s"$path: predictor $predictor over JPEG chunks is malformed")
-        require(predictor == 1 || predictor == 2 || predictor == 3,
-          s"$path: TIFF predictor $predictor unsupported " +
-            "(1=none, 2=horizontal differencing, 3=floating-point)")
-        require(predictor != 2 || sampleFormat != 3,
-          s"$path: predictor 2 over float samples is malformed (floats use predictor 3)")
-        require(predictor != 3 || sampleFormat == 3,
-          s"$path: predictor 3 (floating-point differencing) over integer samples is malformed")
-        // multi-band: chunky (pixel-interleaved, PlanarConfiguration 1 —
-        // the GDAL INTERLEAVE=PIXEL default) and planar (band-separate
-        // chunks, INTERLEAVE=BAND; chunks stored plane-major) both decode
-        // natively. BitsPerSample / SampleFormat carry one entry per band —
-        // mixed-depth bands are rejected, uniform ones collapse to the
-        // single value the decode math uses.
-        val spp = shortOrLong(277, 1)
-        require(spp >= 1 && spp <= 16,
-          s"$path: implausible BigTIFF SamplesPerPixel $spp")
-        val planarCfg = if (spp > 1) shortOrLong(284, 1) else 1
-        require(planarCfg == 1 || planarCfg == 2,
-          s"$path: BigTIFF PlanarConfiguration $planarCfg unsupported " +
-            "(1 = chunky/pixel-interleaved, 2 = planar/band-separate)")
-        require(compression != 7 || planarCfg == 1,
-          s"$path: JPEG-in-TIFF planar layout unsupported (GDAL writes JPEG chunky)")
-        val planesPerChunk = if (planarCfg == 2) spp.toLong else 1L
-        def uniform(tag: Int, name: String, got: Int): Unit =
-          entries.get(tag).foreach { e =>
-            val b = payload(e)
-            val vals = (0 until e.count.toInt).map(i => intAt(e, b, i)).distinct
-            require(vals.size == 1 && vals.head == got.toLong,
-              s"$path: per-band $name values ${vals.mkString(",")} unsupported " +
-                "(bands must share one sample layout)")
-          }
-        uniform(258, "BitsPerSample", bps)
-        uniform(339, "SampleFormat", sampleFormat)
-        if (entries.contains(322) || entries.contains(324)) {
-          // Tiled layout (tags 322/323/324/325) — the cloud-optimized
-          // GeoTIFF (COG) shape: TILED + DEFLATE is the modern distribution
-          // format for exactly the reference's datasets. Same codecs and
-          // predictor as strips, different chunk geometry.
-          require(!entries.contains(273),
-            s"$path: both StripOffsets (273) and tile tags present — malformed")
-          val tw = shortOrLong(322)
-          val tl = shortOrLong(323)
-          require(tw > 0 && tl > 0,
-            s"$path: tiled BigTIFF missing TileWidth/TileLength (322/323)")
-          val tOffsets = longs(324).getOrElse(throw new IllegalArgumentException(
-            s"$path: tiled BigTIFF missing TileOffsets (324)")).toIndexedSeq
-          val nTiles = ((width + tw - 1) / tw).toLong * ((height + tl - 1) / tl) *
-            planesPerChunk
-          require(tOffsets.length.toLong == nTiles,
-            s"$path: ${tOffsets.length} tile offsets for $nTiles tiles")
-          val tCounts =
-            if (compression == 1) Vector.empty[Long]
-            else longs(325).getOrElse(throw new IllegalArgumentException(
-              s"$path: compressed tiled BigTIFF missing TileByteCounts (325)")).toIndexedSeq
-          require(compression == 1 || tCounts.length == tOffsets.length,
-            s"$path: ${tCounts.length} tile byte counts for ${tOffsets.length} tiles")
-          RasterMeta(path, width, height, bps, sampleFormat,
-            scaleX, scaleY, originX, originY, noData,
-          rotX = rotX, rotY = rotY,
-            samplesPerPixel = spp,
-            bigTiff = true, littleEndian = order == ByteOrder.LITTLE_ENDIAN,
-            compression = compression, predictor = predictor,
-            tileWidth = tw, tileLength = tl,
-            tileOffsets = tOffsets, tileByteCounts = tCounts,
-            planarConfig = planarCfg,
-            crsModelType = crsModelType, epsg = epsg, jpegTables = jpegTables)
-        } else {
+      uniform(258, "BitsPerSample", bps)
+      uniform(339, "SampleFormat", sampleFormat)
+      val meta = RasterMeta(path, width, height, bps, sampleFormat,
+        scaleX, scaleY, originX, originY, noData,
+        samplesPerPixel = spp,
+        bigTiff = bigTiff, littleEndian = order == ByteOrder.LITTLE_ENDIAN,
+        compression = compression, predictor = predictor,
+        planarConfig = planarCfg,
+        crsModelType = crsModelType, epsg = epsg, jpegTables = jpegTables,
+        rotX = rotX, rotY = rotY)
+      if (entries.contains(322) || entries.contains(324)) {
+        // Tiled layout (tags 322/323/324/325) — the cloud-optimized
+        // GeoTIFF (COG) shape: TILED + DEFLATE is the modern distribution
+        // format for exactly the reference's datasets. Same codecs and
+        // predictor as strips, different chunk geometry.
+        require(!entries.contains(273),
+          s"$path: both StripOffsets (273) and tile tags present — malformed")
+        val tw = shortOrLong(322)
+        val tl = shortOrLong(323)
+        require(tw > 0 && tl > 0,
+          s"$path: tiled TIFF missing TileWidth/TileLength (322/323)")
+        val tOffsets = longs(324).getOrElse(throw new IllegalArgumentException(
+          s"$path: tiled TIFF missing TileOffsets (324)")).toIndexedSeq
+        val nTiles = ((width + tw - 1) / tw).toLong * ((height + tl - 1) / tl) *
+          planesPerChunk
+        require(tOffsets.length.toLong == nTiles,
+          s"$path: ${tOffsets.length} tile offsets for $nTiles tiles")
+        val tCounts =
+          if (compression == 1) Vector.empty[Long]
+          else longs(325).getOrElse(throw new IllegalArgumentException(
+            s"$path: compressed tiled TIFF missing TileByteCounts (325)")).toIndexedSeq
+        require(compression == 1 || tCounts.length == tOffsets.length,
+          s"$path: ${tCounts.length} tile byte counts for ${tOffsets.length} tiles")
+        meta.copy(tileWidth = tw, tileLength = tl,
+          tileOffsets = tOffsets, tileByteCounts = tCounts)
+      } else {
         val offsets = longs(273).getOrElse(
-          throw new IllegalArgumentException(s"$path: BigTIFF missing StripOffsets (273)"))
+          throw new IllegalArgumentException(s"$path: TIFF missing StripOffsets (273)"))
           .toIndexedSeq
         val rps = entries.get(278).map(e => intAt(e, payload(e), 0))
           .getOrElse(height.toLong)
+        require(rps > 0, s"$path: RowsPerStrip $rps must be positive")
         // chunk-count validation mirrors the tiled branch: a planar file
         // carries planes x stripsPerBand strips — a short offsets array must
         // fail HERE with a typed error, not as an index crash in a task
@@ -592,19 +576,10 @@ object TiffTags {
         val byteCounts =
           if (compression == 1) Vector.empty[Long]
           else longs(279).getOrElse(throw new IllegalArgumentException(
-            s"$path: compressed BigTIFF missing StripByteCounts (279)")).toIndexedSeq
+            s"$path: compressed TIFF missing StripByteCounts (279)")).toIndexedSeq
         require(compression == 1 || byteCounts.length == offsets.length,
           s"$path: ${byteCounts.length} strip byte counts for ${offsets.length} strips")
-        RasterMeta(path, width, height, bps, sampleFormat,
-          scaleX, scaleY, originX, originY, noData,
-          rotX = rotX, rotY = rotY,
-          samplesPerPixel = spp,
-          bigTiff = true, littleEndian = order == ByteOrder.LITTLE_ENDIAN,
-          rowsPerStrip = rps, stripOffsets = offsets,
-          compression = compression, predictor = predictor, stripByteCounts = byteCounts,
-          planarConfig = planarCfg,
-          crsModelType = crsModelType, epsg = epsg, jpegTables = jpegTables)
-        }
+        meta.copy(rowsPerStrip = rps, stripOffsets = offsets, stripByteCounts = byteCounts)
       }
     } finally raf.close()
   }

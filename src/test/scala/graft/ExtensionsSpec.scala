@@ -252,6 +252,15 @@ class ExtensionsSpec extends SparkSpec {
       assert(msgOf(
         "SELECT * FROM sparse_cosine_join('ext_docs', 'doc_id', 'text', 0.0, 1.5)")
         .contains("(0, 1]"))
+      // a wrong text column fails at ANALYSIS, like a wrong id column: the
+      // positioned AnalysisException comes from spark.sql itself (no action)
+      // and EXPLAIN reports it instead of a plan
+      val badText = "SELECT * FROM sparse_cosine_join('ext_docs', 'doc_id', 'no_text')"
+      val eText = intercept[org.apache.spark.sql.AnalysisException](spark.sql(badText))
+      assert(eText.getMessage.contains("argument 3 (text column)"), eText.getMessage)
+      val explained = spark.sql(s"EXPLAIN $badText").collect().map(_.getString(0)).mkString
+      assert(explained.contains("argument 3 (text column)") &&
+        !explained.contains("DeferredResult"), explained)
 
       // rrf_fuse == Scala form (two tiny rankings)
       Seq((10L, 3.0), (11L, 2.0)).toDF("id", "score")

@@ -247,6 +247,27 @@ class GeoTiffSourceSpec extends SparkSpec {
       graft.sources.tiff.TiffTags.read(bad)
     }
     assert(e.getMessage.contains("compression 6 unsupported"))
+    // a CLASSIC file (JDK-written, either byte order) patched the same way
+    // fails the same gate at planning, not inside a task
+    val csrc = TiffFixtures.write(s"$tmp/classic_c6src.tif", 4, 4, TiffFixtures.U8,
+      (c, r) => c + r, 0.0, 10.0, 0.5, None)
+    val cbytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(csrc))
+    val cbb = java.nio.ByteBuffer.wrap(cbytes).order(
+      if (cbytes(0) == 'I') java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+    val cifd = cbb.getInt(4)
+    var cfound = false
+    for (i <- 0 until (cbb.getShort(cifd) & 0xffff)) {
+      val off = cifd + 2 + i * 12
+      if ((cbb.getShort(off) & 0xffff) == 259) { cbb.putShort(off + 8, 6); cfound = true }
+    }
+    assert(cfound)
+    val cbad = s"$tmp/classic_c6.tif"
+    java.nio.file.Files.write(java.nio.file.Paths.get(cbad), cbytes)
+    for (read <- Seq[() => Any](() => graft.sources.tiff.TiffTags.read(cbad),
+        () => Raster.raster2df(spark, Seq(cbad)))) {
+      val ce = intercept[IllegalArgumentException](read())
+      assert(ce.getMessage.contains("compression 6 unsupported"), ce.getMessage)
+    }
   }
 
   test("DEFLATE BigTIFF == uncompressed BigTIFF == classic TIFF on the same pixels") {
@@ -527,14 +548,14 @@ class GeoTiffSourceSpec extends SparkSpec {
     assert(e2.getMessage.contains("IFD chain has only"))
   }
 
-  test("CLASSIC multi-page overview pyramid reads per level through ImageIO") {
+  test("CLASSIC multi-page overview pyramid reads per level via the chunk reader") {
     def v(k: Int, c: Int, r: Int): Double = (k * 50 + c * 3 + r) % 251
     val p = TiffFixtures.writeClassicOverviews(s"$tmp/ovr_classic.tif", 18, 10, v,
       5.0, 40.0, 0.5, Some("255"), levels = 2)
     val m0 = graft.sources.tiff.TiffTags.read(p)
     val m1 = graft.sources.tiff.TiffTags.readOverview(p, 1)
-    assert(!m0.bigTiff && m0.width == 18 && m0.imageIndex == 0)
-    assert(m1.width == 9 && m1.height == 5 && m1.imageIndex == 1 &&
+    assert(!m0.bigTiff && m0.width == 18)
+    assert(m1.width == 9 && m1.height == 5 &&
       m1.pixelScaleX == 1.0 && m1.originX == 5.0 && m1.noData.contains(255.0))
     val o1 = Raster.raster2df(spark, Seq(p), overview = 1).orderBy("lat", "lon").collect()
     assert(o1.length == 9 * 5)
@@ -556,6 +577,108 @@ class GeoTiffSourceSpec extends SparkSpec {
       val r = ((40.0 - w.getDouble(1)) / m2.pixelScaleY - 0.5).round.toInt
       w.getShort(2).toDouble == v(2, c, r)
     })
+  }
+
+  test("classic TIFF through the chunk reader == an independent decode, every fixture shape") {
+    import graft.sources.tiff.{GeoTiffTable, TiffTags}
+    import org.apache.spark.sql.types.{FloatType, ShortType}
+    // Independent reference: the JDK ImageIO TIFF reader decodes each
+    // classic fixture in test scope; raster2df (the chunk reader) must emit
+    // exactly its rows — every pixel whose first band is not NoData, at
+    // the pixel centroid, one column per requested band.
+    def imageIoRows(path: String, overview: Int, bands: Seq[Int]): Seq[Seq[Any]] = {
+      val m = TiffTags.readOverview(path, overview)
+      val reader = javax.imageio.ImageIO.getImageReadersByFormatName("tiff").next()
+      val iis = javax.imageio.ImageIO.createImageInputStream(new java.io.File(path))
+      val ras = try { reader.setInput(iis); reader.read(overview).getRaster }
+        finally { reader.dispose(); iis.close() }
+      def sample(c: Int, r: Int, b: Int): Any = GeoTiffTable.sparkType(m) match {
+        case FloatType => ras.getSampleFloat(c, r, b - 1)
+        case ShortType => ras.getSample(c, r, b - 1).toShort
+        case t => fail(s"oracle does not cover $t")
+      }
+      def masked(c: Int, r: Int): Boolean = m.noData.exists { nd =>
+        sample(c, r, bands.head) match {
+          case f: Float => f == nd.toFloat || (f.isNaN && nd.isNaN)
+          case v: Short => v.toDouble == nd
+        }
+      }
+      for (r <- 0 until m.height; c <- 0 until m.width if !masked(c, r))
+        yield Seq[Any](m.lonOf(c, r), m.latOf(c, r)) ++ bands.map(sample(c, r, _))
+    }
+    def decoded(path: String, overview: Int, bands: Seq[Int], block: Int): Seq[Seq[Any]] =
+      Raster.raster2df(spark, bands.map(_ => path), colNames = bands.map(b => s"b$b"),
+        bands = bands, overview = overview, maxBlockSize = block)
+        .collect().map(_.toSeq).toSeq
+    def sorted(rows: Seq[Seq[Any]]): Seq[Seq[Any]] =
+      rows.sortBy(r => (-r(1).asInstanceOf[Double], r(0).asInstanceOf[Double]))
+    def v5(c: Int, r: Int): Double = if ((c + r) % 5 == 0) -9999.0 else c * 1000.0 + r
+    def vs(c: Int, r: Int): Double =
+      if ((c * 31 + r * 17) % 11 == 0) -1.0 else ((c * 7 + r * 3) % 1000).toDouble
+    def w(name: String, wd: Int, ht: Int, dt: TiffFixtures.Dtype, v: (Int, Int) => Double,
+        nd: Option[String], tile: Int = 0, codec: String = null,
+        geoKeys: Seq[(Int, Int)] = Nil): String =
+      TiffFixtures.write(s"$tmp/oracle_$name.tif", wd, ht, dt, v, 10.0, 50.0, 0.5, nd,
+        tileSize = tile, compressionType = codec, geoKeys = geoKeys)
+    val ovr = TiffFixtures.writeClassicOverviews(s"$tmp/oracle_ovr.tif", 18, 10,
+      (k, c, r) => (k * 50 + c * 3 + r) % 251, 5.0, 40.0, 0.5, Some("255"), levels = 2)
+    val rgb = TiffFixtures.writeRGB(s"$tmp/oracle_rgb.tif", 10, 8,
+      (b, c, r) => b * 40 + c * 10 + r, 10.0, 50.0, 0.5)
+    // (case, path, overview, bands, maxBlockSize)
+    val cases: Seq[(String, String, Int, Seq[Int], Int)] = Seq(
+      ("f32 strips", f32, 0, Seq(1), 4),
+      ("u8 strips", u8, 0, Seq(1), 4),
+      ("s16 strips multi-window", w("s16", 300, 200, TiffFixtures.S16, vs, Some("-1")),
+        0, Seq(1), 128),
+      ("f32 strips 150x120", w("f32s", 150, 120, TiffFixtures.F32, v5, Some("-9999")),
+        0, Seq(1), 70),
+      ("f32 tiled 64", w("f32t", 150, 120, TiffFixtures.F32, v5, Some("-9999"), tile = 64),
+        0, Seq(1), 70),
+      ("f32 nodata nan", w("nan", 6, 4, TiffFixtures.F32,
+        (c, r) => if ((c + r) % 3 == 0) Double.NaN else c + r * 10.0, Some("nan")),
+        0, Seq(1), 4),
+      ("f32 nodata -3.4e+38", w("f32nd", 5, 3, TiffFixtures.F32,
+        (c, r) => if (c == 0) -3.4e38 else c + r * 10.0, Some("-3.4e+38")), 0, Seq(1), 4),
+      ("f32 projected geokeys", w("proj", 10, 8, TiffFixtures.F32, v5, Some("-9999"),
+        geoKeys = Seq(1024 -> 1, 3072 -> 32633)), 0, Seq(1), 4),
+      ("f32 64x48 (the spatial-join shape)", w("sj", 64, 48, TiffFixtures.F32,
+        (c, r) => (c + r) % 97, Some("-1")), 0, Seq(1), 20),
+      ("u8 LZW", w("lzw", 96, 96, TiffFixtures.U8,
+        (c, r) => ((c * 7 + r * 13) % 251).toDouble, None, codec = "LZW"), 0, Seq(1), 40),
+      ("f32 tiled LZW", w("lzwt", 150, 120, TiffFixtures.F32, v5, Some("-9999"),
+        tile = 32, codec = "LZW"), 0, Seq(1), 50),
+      ("f32 ZLib", w("zlib", 150, 120, TiffFixtures.F32, v5, Some("-9999"), codec = "ZLib"),
+        0, Seq(1), 70),
+      ("s16 Deflate", w("deflate", 300, 200, TiffFixtures.S16, vs, Some("-1"),
+        codec = "Deflate"), 0, Seq(1), 128),
+      ("u8 PackBits", w("packbits", 96, 96, TiffFixtures.U8,
+        (c, r) => ((c / 8) * 9 % 251).toDouble, Some("0"), codec = "PackBits"), 0, Seq(1), 40),
+      ("rgb bands 1-3", rgb, 0, Seq(1, 2, 3), 4),
+      ("rgb band 2 alone", rgb, 0, Seq(2), 4),
+      ("overview level 0", ovr, 0, Seq(1), 7),
+      ("overview level 1", ovr, 1, Seq(1), 4),
+      ("overview level 2", ovr, 2, Seq(1), 2))
+    for ((name, path, overview, bands, block) <- cases) {
+      val m = TiffTags.readOverview(path, overview)
+      assert(!m.bigTiff, s"$name: fixture is not classic")
+      val expect = sorted(imageIoRows(path, overview, bands))
+      val got = sorted(decoded(path, overview, bands, block))
+      assert(expect.nonEmpty && got == expect,
+        s"$name (compression ${m.compression}, tiled ${m.tiled}): ${got.size} rows vs " +
+          s"${expect.size} from ImageIO; first difference " +
+          got.zip(expect).find { case (a, b) => a != b })
+    }
+    // classic f32 DEFLATE + predictor 3 (GDAL's float layout): the JDK
+    // reader rejects this predictor, so the reference is the generator
+    val p3 = TiffFixtures.writeBigTiff(s"$tmp/oracle_fp3.tif", 40, 30, v5,
+      10.0, 50.0, 0.5, Some("-9999"), rowsPerStrip = 7, compression = 8, predictor = 3,
+      classic = true)
+    val m3 = TiffTags.read(p3)
+    assert(!m3.bigTiff && m3.compression == 8 && m3.predictor == 3)
+    val expect3 = sorted(for (r <- 0 until 30; c <- 0 until 40 if v5(c, r) != -9999.0)
+      yield Seq[Any](10.0 + (c + 0.5) * 0.5, 50.0 - (r + 0.5) * 0.5, v5(c, r).toFloat))
+    for (block <- Seq(4096, 9))
+      assert(sorted(decoded(p3, 0, Seq(1), block)) == expect3, s"predictor 3, block $block")
   }
 
   test("COG overviews of two rasters zip positionally at the same level") {

@@ -311,10 +311,12 @@ object TiffFixtures {
   }
 
   /** Hand-written BigTIFF (magic 43, 8-byte offsets), same GeoTIFF tags as
-    * [[write]]. ImageIO's TIFF writer cannot emit BigTIFF, so the byte
-    * layout is assembled directly — which doubles as documentation of what
-    * TiffTags must parse. `rowsPerStrip <= 0` means one strip for the whole
-    * image. Supports f32/u8/s16 samples, compression 1 (none), 8 (DEFLATE),
+    * [[write]]; with `classic = true` the same layout behind a classic
+    * header (magic 42, 4-byte offsets, 12-byte entries). ImageIO's TIFF
+    * writer cannot emit BigTIFF, nor the predictor-3 float layout, so the
+    * byte layout is assembled directly — which doubles as documentation of
+    * what TiffTags must parse. `rowsPerStrip <= 0` means one strip for the
+    * whole image. Supports f32/u8/s16 samples, compression 1 (none), 8 (DEFLATE),
     * 5 (LZW via [[lzwEncode]]) or 32773 (PackBits via [[packBitsEncode]]),
     * predictor 2 (horizontal differencing,
     * integer dtypes only) and predictor 3 (floating-point differencing,
@@ -348,7 +350,9 @@ object TiffFixtures {
       // compression 34925 only: encode chunks in the header-less legacy
       // .lzma "alone" layout instead of the .xz container libtiff writes —
       // exercises the reader's format sniff
-      lzmaAlone: Boolean = false): String = {
+      lzmaAlone: Boolean = false,
+      // classic TIFF header and widths instead of BigTIFF's
+      classic: Boolean = false): String = {
     import java.nio.{ByteBuffer, ByteOrder}
     val order = if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
     val (bps, sampleFormat) = dtype match {
@@ -362,8 +366,13 @@ object TiffFixtures {
       s"fixture compression $compression unsupported")
     require(modelTransform == null || modelTransform.length == 16,
       "modelTransform must be a 16-double row-major 4x4 matrix")
-    require(spp >= 1 && spp <= 4, "fixture spp must be 1..4 (per-band tags written inline)")
+    require(spp >= 1 && spp <= (if (classic) 2 else 4),
+      "fixture spp must be 1..4, 1..2 for classic (per-band tags written inline)")
     require(spp == 1 || bandValue != null, "multi-band fixtures need bandValue(band, c, r)")
+    // offset and entry value-field width: 4 bytes classic, 8 BigTIFF
+    val ws = if (classic) 4 else 8
+    def putOff(b: ByteBuffer, v: Long): Unit =
+      if (classic) b.putInt(v.toInt) else b.putLong(v)
     val bytesPer = bps / 8
     val rps = if (rowsPerStrip <= 0) height else rowsPerStrip
     val nStrips = (height + rps - 1) / rps
@@ -425,7 +434,7 @@ object TiffFixtures {
       }
     }
 
-    val pixOff = 16L
+    val pixOff = if (classic) 8L else 16L
     val stripOff = new Array[Long](nChunks)
     var cur = pixOff
     for (s <- 0 until nChunks) { stripOff(s) = cur; cur += strips(s).length }
@@ -436,21 +445,26 @@ object TiffFixtures {
     val mtOff = cur; if (useMt) cur += 128
     val gkShorts: Array[Short] = geoKeyShorts(geoKeys)
     val gkOff = cur
-    if (gkShorts.length * 2 > 8) cur += gkShorts.length * 2L
-    val soOff = cur; if (nChunks > 1) cur += nChunks * 8L
-    val scOff = cur; if (nChunks > 1) cur += nChunks * 8L
+    if (gkShorts.length * 2 > ws) cur += gkShorts.length * 2L
+    val soOff = cur; if (nChunks > 1) cur += nChunks.toLong * ws
+    val scOff = cur; if (nChunks > 1) cur += nChunks.toLong * ws
     val ndBytes = noData.map(s => s.getBytes("US-ASCII") :+ 0.toByte)
     val ndOff = cur
-    ndBytes.foreach { b => if (b.length > 8) cur += b.length }
+    ndBytes.foreach { b => if (b.length > ws) cur += b.length }
     val ifdOff = cur
     val nTags = (if (useMt) 10 else 11) + (if (gkShorts.nonEmpty) 1 else 0) +
       (if (ndBytes.isDefined) 1 else 0) + (if (predictor != 1) 1 else 0) +
       (if (spp > 1 || planarOverride > 0) 1 else 0)
-    val total = (ifdOff + 8 + nTags * 20 + 8).toInt
+    val total =
+      if (classic) (ifdOff + 2 + nTags * 12 + 4).toInt
+      else (ifdOff + 8 + nTags * 20 + 8).toInt
     val buf = ByteBuffer.allocate(total).order(order)
-    // header: II/MM, 43, offset-size 8, pad 0, IFD offset
+    // header: II/MM, then 42 + 4-byte IFD offset (classic) or 43,
+    // offset-size 8, pad 0, 8-byte IFD offset (BigTIFF)
     val bom = if (bigEndian) 'M'.toByte else 'I'.toByte
-    buf.put(bom).put(bom).putShort(43).putShort(8).putShort(0).putLong(ifdOff)
+    buf.put(bom).put(bom)
+    if (classic) buf.putShort(42).putInt(ifdOff.toInt)
+    else buf.putShort(43).putShort(8).putShort(0).putLong(ifdOff)
     for (s <- 0 until nChunks) {
       buf.position(stripOff(s).toInt); buf.put(strips(s))
     }
@@ -463,37 +477,39 @@ object TiffFixtures {
       buf.position(tieOff.toInt)
       Seq(0.0, 0.0, 0.0, originX, originY, 0.0).foreach(buf.putDouble)
     }
-    if (gkShorts.length * 2 > 8) {
+    if (gkShorts.length * 2 > ws) {
       buf.position(gkOff.toInt)
       gkShorts.foreach(buf.putShort)
     }
     if (nChunks > 1) {
-      buf.position(soOff.toInt); stripOff.foreach(buf.putLong)
-      buf.position(scOff.toInt); stripCnt.foreach(buf.putLong)
+      buf.position(soOff.toInt); stripOff.foreach(putOff(buf, _))
+      buf.position(scOff.toInt); stripCnt.foreach(putOff(buf, _))
     }
-    ndBytes.foreach { b => if (b.length > 8) { buf.position(ndOff.toInt); buf.put(b) } }
+    ndBytes.foreach { b => if (b.length > ws) { buf.position(ndOff.toInt); buf.put(b) } }
     buf.position(ifdOff.toInt)
-    buf.putLong(nTags.toLong)
-    // entries must be ascending by tag; value field is 8 bytes, values
-    // smaller than 8 bytes sit left-justified (first bytes of the field in
+    if (classic) buf.putShort(nTags.toShort) else buf.putLong(nTags.toLong)
+    // entries must be ascending by tag; the value field is `ws` bytes,
+    // smaller values sit left-justified (first bytes of the field in
     // either byte order — ByteBuffer's relative puts give exactly that)
     def entry(tag: Int, tpe: Int, count: Long)(writeVal: ByteBuffer => Unit): Unit = {
-      buf.putShort(tag.toShort).putShort(tpe.toShort).putLong(count)
+      buf.putShort(tag.toShort).putShort(tpe.toShort)
+      if (classic) buf.putInt(count.toInt) else buf.putLong(count)
       val pos = buf.position()
       writeVal(buf)
-      buf.position(pos + 8)
+      buf.position(pos + ws)
     }
+    val offType = if (classic) 4 else 16 // LONG vs LONG8
     entry(256, 4, 1)(_.putInt(width))              // ImageWidth
     entry(257, 4, 1)(_.putInt(height))             // ImageLength
     entry(258, 3, spp.toLong)(b =>                 // BitsPerSample (per band; spp<=4 fits inline)
       (0 until spp).foreach(_ => b.putShort(bps.toShort)))
     entry(259, 3, 1)(_.putShort(compression.toShort)) // Compression
-    entry(273, 16, nChunks.toLong)(b =>            // StripOffsets (LONG8)
-      if (nChunks == 1) b.putLong(stripOff(0)) else b.putLong(soOff))
+    entry(273, offType, nChunks.toLong)(b =>       // StripOffsets
+      putOff(b, if (nChunks == 1) stripOff(0) else soOff))
     entry(277, 3, 1)(_.putShort(spp.toShort))      // SamplesPerPixel
     entry(278, 4, 1)(_.putInt(rps))                // RowsPerStrip
-    entry(279, 16, nChunks.toLong)(b =>            // StripByteCounts (LONG8)
-      if (nChunks == 1) b.putLong(stripCnt(0)) else b.putLong(scOff))
+    entry(279, offType, nChunks.toLong)(b =>       // StripByteCounts
+      putOff(b, if (nChunks == 1) stripCnt(0) else scOff))
     if (spp > 1 || planarOverride > 0)
       entry(284, 3, 1)(_.putShort(                 // PlanarConfiguration
         (if (planarOverride > 0) planarOverride
@@ -503,20 +519,20 @@ object TiffFixtures {
     entry(339, 3, spp.toLong)(b =>                 // SampleFormat (per band)
       (0 until spp).foreach(_ => b.putShort(sampleFormat.toShort)))
     if (useMt)
-      entry(34264, 12, 16)(_.putLong(mtOff))       // ModelTransformation
+      entry(34264, 12, 16)(putOff(_, mtOff))       // ModelTransformation
     else {
-      entry(33550, 12, 3)(_.putLong(scaleOff))     // ModelPixelScale
-      entry(33922, 12, 6)(_.putLong(tieOff))       // ModelTiepoint
+      entry(33550, 12, 3)(putOff(_, scaleOff))     // ModelPixelScale
+      entry(33922, 12, 6)(putOff(_, tieOff))       // ModelTiepoint
     }
     if (gkShorts.nonEmpty)
       entry(34735, 3, gkShorts.length.toLong)(b => // GeoKeyDirectory
-        if (gkShorts.length * 2 <= 8) gkShorts.foreach(b.putShort)
-        else b.putLong(gkOff))
+        if (gkShorts.length * 2 <= ws) gkShorts.foreach(b.putShort)
+        else putOff(b, gkOff))
     ndBytes.foreach { b =>
       entry(42113, 2, b.length.toLong)(bb =>       // GDAL_NODATA
-        if (b.length <= 8) bb.put(b) else bb.putLong(ndOff))
+        if (b.length <= ws) bb.put(b) else putOff(bb, ndOff))
     }
-    buf.putLong(0L) // next-IFD terminator
+    putOff(buf, 0L) // next-IFD terminator
     val f = new File(path)
     f.getParentFile.mkdirs()
     java.nio.file.Files.write(f.toPath, buf.array())
